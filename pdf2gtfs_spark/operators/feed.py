@@ -2,10 +2,13 @@
 feed.zip (reference: datastructures/gtfs_output/handler.py:118-310).
 
 Spark-first shapes:
-- routes from first/last parseable stop per entry (routes.py:138-170):
-  groupBy(trip) + min_by/max_by — one shuffle at trip grain;
-- trips/stop_times pruning (handler.py:259-264, trips.py:66-72):
-  left_semi joins (J9), never collected;
+- one per-trip aggregate (`trip_route_service`): each entry's route
+  from its first/last parseable stop (routes.py:138-170) and its
+  calendar service — groupBy(trip) + min_by/max_by;
+- trips are the handler walk (operators/gtfs.handler_walk) joined to
+  that aggregate on the anchor entry, so only trips with stop_times
+  survive (trips.py:66-72) and routes are the distinct routes of the
+  kept trips (handler.py:259-264) — pruning needs no extra join;
 - holiday calendar_dates (handler.py:219-237): broadcast cross join of
   the (tiny) calendar dim against a deterministic holiday dim (J11);
 - the zip writer collects only the final per-file frames — at real
@@ -33,8 +36,8 @@ from pdf2gtfs_spark.operators import register
 from pdf2gtfs_spark.operators._aux import aux_glob, aux_path, write_aux_spark
 from pdf2gtfs_spark.operators.gtfs import (
     _ST_TIME_RE, _md5_id, _time_parse_cols, annots_key_col,
-    apply_service_day_offsets, build_calendar, build_stop_times,
-    build_stops, build_trips, expand_repeats, service_day_offsets,
+    build_calendar, build_stop_times, build_stops, handler_walk,
+    shift_stop_times,
 )
 
 AGENCY_ROW = ("0", "pdf2gtfs", "https://example.com", "Europe/Berlin")
@@ -50,55 +53,34 @@ def holiday_dates() -> list[str]:
             for m, d in HOLIDAY_MONTH_DAYS]
 
 
+def _routes_of(trips: DataFrame) -> DataFrame:
+    """routes.txt rows: the distinct routes of ``trips``; dedup on
+    (agency, short, long) with deterministic ids (A4 first-wins
+    semantics are id-free here because the id is a pure function of
+    the key)."""
+    return (trips.select("route_id", "route_short_name",
+                         "route_long_name").distinct()
+            .select("route_id", F.lit(AGENCY_ROW[0]).alias("agency_id"),
+                    "route_short_name", "route_long_name",
+                    F.lit(3).alias("route_type")))
+
+
 def build_routes(entries: DataFrame,
                  cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
-    """Routes from each entry's first/last parseable stop
-    (routes.py:138-170); dedup on (agency, short, long) with
-    deterministic ids (A4 first-wins semantics are id-free here because
-    the id is a pure function of the key)."""
+    """Routes of every entry with a parseable stop (routes.py:138-170),
+    unpruned."""
+    return _routes_of(trip_route_service(entries, cfg))
+
+
+def trip_route_service(entries: DataFrame,
+                       cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
+    """Per timed entry: its route (short name, first-last long name and
+    their id) and calendar service (days+annotations key)."""
     # NOTE connection stops are NOT excluded: the reference's
     # names_from_entry iterates entry.values, which still carries the
     # values of connection-flagged stops (routes.py:138-161; pinned by
     # tests/test_ref_gtfs_differential.py). Only stops.txt and
     # stop_times.txt skip connections.
-    timed = (entries.where("kind = 'time' AND value IS NOT NULL "
-                           "AND stop_name IS NOT NULL")
-             .withColumn("trip_key",
-                         F.concat_ws("/", "conv_id", "turn_idx",
-                                     "table_id", "entry_id")))
-    # names_from_entry runs RAW strptime (routes.py:149-152): no
-    # space strip (unlike Time.from_string) and strict field ranges —
-    # '5. 35' and '5.62' are not route-name anchors (gtfs sweep v4)
-    raw_is_time, _ = _time_parse_cols(F.col("value"), cfg.time_format,
-                                      bounded=True)
-    parseable = timed.where(raw_is_time)
-    per_trip = (parseable.groupBy("trip_key")
-                .agg(F.min_by("stop_name", "stop_pos").alias("first_stop"),
-                     F.max_by("stop_name", "stop_pos").alias("last_stop"),
-                     F.first("route_name", ignorenulls=True)
-                     .alias("route_name")))
-    routes = (per_trip
-              .select(F.coalesce("route_name", F.lit(""))
-                      .alias("route_short_name"),
-                      F.concat_ws("-", "first_stop", "last_stop")
-                      .alias("route_long_name"))
-              .distinct()
-              .withColumn("agency_id", F.lit(AGENCY_ROW[0]))
-              .withColumn("route_id", _md5_id(
-                  F.concat_ws("|", "agency_id", "route_short_name",
-                              "route_long_name")))
-              .withColumn("route_type", F.lit(3)))
-    return routes.select("route_id", "agency_id", "route_short_name",
-                         "route_long_name", "route_type")
-
-
-def trip_route_service(entries: DataFrame,
-                       cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
-    """trips.txt rows: each timed entry becomes a trip bound to its
-    route (via first/last stop key) and calendar service (via
-    days+annotations key)."""
-    # connection stops included — must mirror build_routes' route key
-    # exactly (see the NOTE there)
     timed = (entries.where("kind = 'time' AND value IS NOT NULL "
                            "AND stop_name IS NOT NULL")
              .withColumn("trip_id",
@@ -113,8 +95,9 @@ def trip_route_service(entries: DataFrame,
                 F.col("days"), F.array().cast("array<string>")), ","))
     if "annots_key" not in timed.columns:
         timed = timed.withColumn("annots_key", annots_key_col())
-    # must mirror build_routes' raw-strptime anchor rule (see NOTE
-    # there): the trip's route key comes from the same first/last pair
+    # names_from_entry runs RAW strptime (routes.py:149-152): no
+    # space strip (unlike Time.from_string) and strict field ranges —
+    # '5. 35' and '5.62' are not route-name anchors (gtfs sweep v4)
     raw_is_time, _ = _time_parse_cols(F.col("value"), cfg.time_format,
                                       bounded=True)
     parseable = timed.where(raw_is_time)
@@ -126,13 +109,17 @@ def trip_route_service(entries: DataFrame,
                      F.first("days_key").alias("days_key"),
                      F.first("annots_key").alias("annots_key")))
     return (per_trip
+            .withColumn("route_short_name",
+                        F.coalesce("route_name", F.lit("")))
+            .withColumn("route_long_name",
+                        F.concat_ws("-", "first_stop", "last_stop"))
             .withColumn("route_id", _md5_id(F.concat_ws(
-                "|", F.lit(AGENCY_ROW[0]),
-                F.coalesce("route_name", F.lit("")),
-                F.concat_ws("-", "first_stop", "last_stop"))))
+                "|", F.lit(AGENCY_ROW[0]), "route_short_name",
+                "route_long_name")))
             .withColumn("service_id", _md5_id(
                 F.concat_ws("|", "days_key", "annots_key")))
-            .select("trip_id", "route_id", "service_id"))
+            .select("trip_id", "route_id", "service_id",
+                    "route_short_name", "route_long_name"))
 
 
 def build_calendar_dates(calendar: DataFrame,
@@ -151,17 +138,6 @@ def build_calendar_dates(calendar: DataFrame,
             .orderBy("service_id", "date"))
 
 
-def remove_unused(trips: DataFrame, stop_times: DataFrame,
-                  routes: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """J9 pruning: trips without stop_times, then routes without trips
-    (trips.py:66-72, handler.py:259-264) — left_semi joins."""
-    trips_kept = trips.join(stop_times.select("trip_id").distinct(),
-                            "trip_id", "left_semi")
-    routes_kept = routes.join(trips_kept.select("route_id").distinct(),
-                              "route_id", "left_semi")
-    return trips_kept, routes_kept
-
-
 def build_feed(entries: DataFrame, spark: SparkSession,
                cfg: ExtractConfig = DEFAULT_CONFIG,
                stops_src: DataFrame | None = None) -> dict[str, DataFrame]:
@@ -170,35 +146,20 @@ def build_feed(entries: DataFrame, spark: SparkSession,
     Pass ``stops_src`` (pipeline.stops_table) so stops.txt also carries
     stops without any entry value, like the reference does."""
     stops = build_stops(entries, cfg, stops_src=stops_src)
-    base_trips = build_trips(entries)
     st = build_stop_times(entries, stops, cfg)
-    # cross-entry service-day offsets precede repeat expansion: the
-    # reference duplicates the already-shifted previous trip and
-    # compares against the already-shifted next (handler.py:144-217)
-    st = apply_service_day_offsets(
-        st, service_day_offsets(entries, st, cfg))
-    rep = expand_repeats(entries, st, cfg)
-    stop_times = st.select(
+    walk = handler_walk(entries, st, cfg)
+    stop_times = shift_stop_times(st, walk).select(
         "trip_id", "stop_sequence", "arrival_time", "departure_time",
-        "stop_id").unionByName(rep.select(
-            "trip_id", "stop_sequence", "arrival_time", "departure_time",
-            "stop_id"))
-    routes = build_routes(entries, cfg)
+        "stop_id")
+    # a trip with stop_times (src_trip set) takes its route and service
+    # from its anchor entry: itself, or for a repeat copy
+    # "<current>#k" the current (right) entry (handler.py:163-216)
+    trips = (walk.where("src_trip IS NOT NULL")
+             .withColumn("anchor",
+                         F.regexp_replace("trip_id", "#[0-9]+$", ""))
+             .join(trip_route_service(entries, cfg)
+                   .withColumnRenamed("trip_id", "anchor"), "anchor"))
     cal = build_calendar(entries)
-    trs = trip_route_service(entries, cfg)
-    trips = (base_trips.select("trip_id")
-             .join(trs, "trip_id"))
-    # repeat-expanded trips ("<next-anchor>#k") inherit the NEXT (right)
-    # anchor's route/service — the reference's trip_factory is built
-    # from the current entry (handler.py:163-216)
-    rep_trips = (rep.select("trip_id").distinct()
-                 .withColumn("anchor",
-                             F.substring_index("trip_id", "#", 1))
-                 .join(trs.withColumnRenamed("trip_id", "anchor"),
-                       "anchor")
-                 .drop("anchor"))
-    trips = trips.unionByName(rep_trips)
-    trips_kept, routes_kept = remove_unused(trips, stop_times, routes)
     agency = spark.createDataFrame(
         [AGENCY_ROW], "agency_id string, agency_name string, "
         "agency_url string, agency_timezone string")
@@ -212,10 +173,10 @@ def build_feed(entries: DataFrame, spark: SparkSession,
     return {
         "agency": agency,
         "stops": stops.select("stop_id", "stop_name"),
-        "routes": routes_kept,
+        "routes": _routes_of(trips),
         "calendar": calendar,
         "calendar_dates": calendar_dates,
-        "trips": trips_kept.select("route_id", "service_id", "trip_id"),
+        "trips": trips.select("route_id", "service_id", "trip_id"),
         "stop_times": stop_times,
     }
 
@@ -350,7 +311,7 @@ SELECT trip_key AS trip_id,
 FROM per_trip ORDER BY trip_id
 """)
 def gtfs_feed_pruning(spark, sf_dir):
-    """remove_unused semantics (J9): only trips that produce stop_times
+    """Pruning semantics (J9): only trips that produce stop_times
     survive; route/service ids attach relationally."""
     ent = _materialize_feed_entries(spark)
     stops = build_stops(ent)

@@ -1,21 +1,24 @@
 """GTFS-shaping relational tail (SURVEY.md §2.4-2.5, §3.1 stage 4).
 
-All ops are pure DataFrame transformations over the extraction output
-(`entries`/`stops` from plans.pipeline):
+Transformations over the extraction output (`entries`/`stops` from
+plans.pipeline):
 
 - stops dedup: first-wins on normalized name with deterministic hash
   ids (replaces the reference's sequential UIDGenerator, utils.py:15-48
   — X18: sequential ids are nondeterministic under distribution)
-- trips: one per (conv, turn, table, entry)
-- stop_times: W6 sequence numbering, W7 24h service-day rollover
+- stop_times: W6 sequence numbering, W7 24h rollover within a trip
   (stop_times.py:199-213), W11 consecutive-same-stop arrival/departure
-  fold (stop_times.py:215-221), X1 time parsing with >24h semantics
-- repeat expansion: sequence+explode between anchor trips
-  (stop_times.py:247-264), cycle/mean strategies (X10, A10)
+  fold (stop_times.py:215-221), X1 time parsing with >24h semantics —
+  windows and one hash shuffle per trip
+- the handler loop (handler.py:144-217): cross-entry service-day
+  offsets and repeat copies (stop_times.py:247-264, cycle/mean
+  strategies X10, A10) in ONE sequential walk per table
+  (`handler_walk`, applyInPandas keyed by table, the only Python
+  operator here); `shift_stop_times` applies it with one join
 - calendar: dedup on (days, annotations) (calendar.py:109-123)
 
-Scale: every op is a window or hash-shuffle on (conv_id-derived) keys;
-no driver loops, no UDFs.
+Scale: every op is a window, hash shuffle or grouped map on
+(conv_id-derived) keys; no driver loops.
 """
 
 from __future__ import annotations
@@ -119,18 +122,6 @@ def build_stops(entries: DataFrame,
                 F.col("stop_name"), "normalized_name"))
 
 
-def build_trips(entries: DataFrame) -> DataFrame:
-    """One trip per timed entry; deterministic trip key."""
-    return (entries.where("kind = 'time'")
-            .select("conv_id", "turn_idx", "table_id", "entry_id",
-                    "header_text", "days", "route_name")
-            .distinct()
-            .withColumn(
-                "trip_id",
-                F.concat_ws("/", "conv_id", "turn_idx", "table_id",
-                            "entry_id")))
-
-
 def build_stop_times(entries: DataFrame, stops: DataFrame,
                      cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
     """entries -> GTFS stop_times rows.
@@ -199,201 +190,40 @@ def build_stop_times(entries: DataFrame, stops: DataFrame,
             .orderBy("trip_id", "stop_sequence"))
 
 
-def expand_repeats(entries: DataFrame, stop_times: DataFrame,
-                   cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
-    """Repeat expansion (stop_times.py:247-264) as sequence+explode.
+def handler_walk(entries: DataFrame, stop_times: DataFrame,
+                 cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
+    """(trip_id, src_trip, shift_seconds): the reference's per-table
+    handler loop (handler.py:144-217), which shifts each trip by its
+    service-day offset and emits repeat copies, mirrored bug-for-bug:
 
-    For each repeat column sandwiched between two timed entries, emit
-    shifted copies of the previous trip until the next trip's start is
-    reached. Shift of the k-th copy under the cycle strategy:
-        shift(k) = (k // len) * sum(deltas) + prefix[k % len]
-    computed with element_at over a per-entry cumulative-sum array —
-    no UDF, no driver loop.
-    """
-    reps = (entries.where(
-                "kind = 'repeat' AND repeat_intervals IS NOT NULL "
-                "AND size(repeat_intervals) > 0")
-            .select("conv_id", "turn_idx", "table_id", "entry_id",
-                    "repeat_intervals").distinct())
-    if cfg.repeat_strategy == "mean":
-        reps = reps.withColumn(
-            "deltas",
-            F.array(F.aggregate("repeat_intervals", F.lit(0.0),
-                                lambda a, x: a + x)
-                    / F.size("repeat_intervals")))
-    else:
-        reps = reps.withColumn(
-            "deltas", F.col("repeat_intervals").cast("array<double>"))
-
-    # Anchor pairing follows the reference handler loop EXACTLY
-    # (handler.py:175-216): ``previous`` advances ONLY when a timed
-    # entry is processed with NO pending repeat, so stacked repeat
-    # sandwiches (time, repeat, time, repeat, time) all anchor on the
-    # entry before the FIRST repeat — the naive nearest-neighbor lag()
-    # used before r6 anchored each repeat on its left neighbor and
-    # diverged on multi-repeat tables (sweep seed 97194).  Also
-    # mirrored: a days-pattern change resets previous=None
-    # (same_days, calendar.py:109-115), a repeat with previous=None is
-    # skipped (handler.py:205-210), a repeat entry WITHOUT intervals
-    # CLEARS the pending repeat, and a later repeat replaces an
-    # earlier pending one (handler.py:182-184).  Same per-table walk
-    # shape as service_day_offsets below: groups are single tables, so
-    # the recurrence stays local at any scale.
-    ent2 = entries.where("kind IN ('time', 'repeat')")
-    days_key2 = F.array_join(F.coalesce(
-        F.col("days"), F.array().cast("array<string>")), ",")
-    repeat_ok2 = ((F.col("kind") == "repeat")
-                  & F.col("repeat_intervals").isNotNull()
-                  & (F.size("repeat_intervals") > 0))
-    meta2 = (ent2.select("conv_id", "turn_idx", "table_id", "entry_id",
-                         "kind", days_key2.alias("days_key"),
-                         repeat_ok2.alias("repeat_ok"))
-             .distinct())
-
-    def pair_walk(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        import pandas as pd
-
-        rows = []
-        prev = None
-        prev_days = None
-        pending = None
-        sub = pdf.sort_values("entry_id")
-        conv = pdf["conv_id"].iloc[0]
-        turn = pdf["turn_idx"].iloc[0]
-        tab = pdf["table_id"].iloc[0]
-        for eid, kind, dk, rok in zip(sub["entry_id"], sub["kind"],
-                                      sub["days_key"],
-                                      sub["repeat_ok"]):
-            if kind == "repeat":
-                pending = int(eid) if rok else None
-                continue
-            if prev_days is not None and dk != prev_days:
-                prev = None
-            if pending is None:
-                prev = int(eid)
-            else:
-                if prev is not None:
-                    rows.append((conv, int(turn), int(tab),
-                                 pending, prev, int(eid)))
-                pending = None
-            prev_days = dk
-        return pd.DataFrame(rows, columns=[
-            "conv_id", "turn_idx", "table_id", "entry_id",
-            "prev_entry", "next_entry"])
-
-    pairs = (meta2.groupBy("conv_id", "turn_idx", "table_id")
-             .applyInPandas(pair_walk,
-                            "conv_id string, turn_idx int, "
-                            "table_id int, entry_id int, "
-                            "prev_entry int, next_entry int"))
-    anchored = (reps.join(pairs,
-                          ["conv_id", "turn_idx", "table_id",
-                           "entry_id"])
-                .select("conv_id", "turn_idx", "table_id", "deltas",
-                        "prev_entry", "next_entry"))
-    key = F.concat_ws("/", "conv_id", "turn_idx", "table_id")
-    anchored = (anchored
-                .withColumn("prev_trip",
-                            F.concat_ws("/", key, "prev_entry"))
-                .withColumn("next_trip",
-                            F.concat_ws("/", key, "next_entry")))
-    # The reference's stopping rule compares the two trips at the FIRST
-    # stop (in the previous trip's sequence order) that both trips
-    # share (stop_times.py:272-279 __lt__ walks previous' entries and
-    # compares at the first stop_id found in next), so the gap is
-    # measured there — not at each trip's own first stop.  Trips with
-    # no common stop make the reference assert/loop; they are dropped
-    # here (gap is null -> inner join removes the pair).
-    p = stop_times.select(F.col("trip_id").alias("prev_trip"),
-                          F.col("stop_sequence").alias("p_seq"),
-                          F.col("arr_seconds").alias("p_arr"),
-                          "stop_id")
-    nx = stop_times.select(F.col("trip_id").alias("next_trip"),
-                           F.col("arr_seconds").alias("n_arr"),
-                           "stop_id")
-    gaps = (anchored.select("prev_trip", "next_trip").distinct()
-            .join(p, "prev_trip")
-            .join(nx, ["next_trip", "stop_id"])
-            .groupBy("prev_trip", "next_trip")
-            .agg(F.min_by(F.col("n_arr") - F.col("p_arr"), "p_seq")
-                 .alias("gap")))
-    anchored = (anchored
-                .join(gaps, ["prev_trip", "next_trip"])
-                .where(F.col("gap") > 0))
-    # cumulative-sum array of one delta cycle
-    anchored = (anchored
-                .withColumn("cycle_sum",
-                            F.aggregate("deltas", F.lit(0.0),
-                                        lambda a, x: a + x) * 60)
-                .withColumn(
-                    "prefix",
-                    F.transform(
-                        F.sequence(F.lit(1), F.size("deltas")),
-                        lambda i: F.aggregate(
-                            F.slice("deltas", 1, i), F.lit(0.0),
-                            lambda a, x: a + x) * 60))
-                .withColumn("n_deltas", F.size("deltas")))
-    min_delta = F.array_min("deltas") * 60
-    k_hi = F.ceil(F.col("gap") / min_delta) + 1
-    exploded = (anchored
-                .withColumn("k", F.explode(F.sequence(F.lit(1), k_hi)))
-                .withColumn(
-                    "shift_s",
-                    (F.floor((F.col("k") - 1) / F.col("n_deltas"))
-                     * F.col("cycle_sum"))
-                    + F.element_at(
-                        "prefix",
-                        ((F.col("k") - 1) % F.col("n_deltas") + 1)
-                        .cast("int")))
-                # strict <: the reference keeps a copy only while
-                # new < next_ at the common stop (add_repeat breaks on
-                # __gt__ = not __lt__, so an exact tie is dropped)
-                .where(F.col("shift_s") < F.col("gap")))
-    copies = (exploded
-              .select("prev_trip", "next_trip", "k",
-                      F.col("shift_s").cast("bigint").alias("shift_s")))
-    # times are shifted copies of the PREVIOUS trip, but the generated
-    # trip's identity (and thus route/service inheritance in
-    # build_feed) comes from the NEXT entry: the reference's
-    # trip_factory is built from the CURRENT (right) entry's route_id
-    # and calendar entry (handler.py:163-216, add_repeat)
-    out = (stop_times.join(
-               copies.withColumnRenamed("prev_trip", "trip_id"), "trip_id")
-           .select(
-               F.concat_ws("#", "next_trip", F.col("k").cast("string"))
-               .alias("trip_id"),
-               "stop_sequence",
-               (F.col("arr_seconds") + F.col("shift_s"))
-               .alias("arr_seconds"),
-               (F.col("dep_seconds") + F.col("shift_s"))
-               .alias("dep_seconds"),
-               "stop_id")
-           .withColumn("arrival_time", gtfs_time_str(F.col("arr_seconds")))
-           .withColumn("departure_time", gtfs_time_str(F.col("dep_seconds")))
-           .select("trip_id", "stop_sequence", "arr_seconds", "dep_seconds",
-                   "arrival_time", "departure_time", "stop_id"))
-    return out
-
-
-def service_day_offsets(entries: DataFrame, stop_times: DataFrame,
-                        cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
-    """(trip_id, shift_seconds): the reference's service-day offset
-    chain over a table's entry sequence (handler.py:144-217), mirrored
-    bug-for-bug:
-
+    - a timed entry maps to itself with its offset (src_trip null when
+      it has no stop_times row: it still steers the loop, but has no
+      times to shift);
+    - the k-th repeat copy ``<current>#k`` maps to the previous anchor
+      with ``prev_shift + shift(k)``, where under the cycle strategy
+      ``shift(k) = (k-1) // len * sum(deltas) + prefix[(k-1) % len]``;
+      copies are kept while shifted previous < shifted current at the
+      common stop (add_repeat breaks on __gt__ = not __lt__, so a tie
+      is dropped, stop_times.py:247-264).  The copy's identity (and so
+      its route/service in build_feed) is the CURRENT (right) entry's:
+      the reference's trip_factory is built from it;
     - new_day() tests ``previous > current`` where __gt__ is
       ``not __lt__ and not __eq__`` (stop_times.py:285-286) and __lt__
       compares arrivals at the FIRST stop (in the previous trip's
       order) shared with the current trip — so a tie OR a disjoint
-      stop set also triggers the +24h shift;
+      stop set also triggers the +24h shift.  The same lookup gives
+      the copies' gap;
     - the accumulated ``service_day_offset`` is passed to add_multiple
       as ``Time(offset)`` — i.e. as HOURS, not days (handler.py:152,
       stop_times.py:202): the n-th day-crossing column is shifted by
       24h + (n-1)h on top of earlier offsets;
-    - ``previous`` is NOT advanced past the right anchor of a repeat
-      sandwich (handler.py:205-216: ``previous = current`` only runs
-      ``if not repeat``), so the next comparison still uses the left
-      anchor;
+    - ``previous`` advances only when a timed entry is processed with
+      NO pending repeat (handler.py:205-216), so stacked sandwiches
+      (time, repeat, time, repeat, time) all anchor on the entry before
+      the FIRST repeat, and the right anchor is never compared against;
+      a repeat entry WITHOUT intervals clears the pending repeat, a
+      later repeat replaces an earlier pending one (handler.py:182-184)
+      and a repeat with no previous is skipped (handler.py:205-210);
     - the chain resets (offset=0, previous=None) when the entry's
       calendar DAYS differ from the previous entry's — annotations are
       not part of same_days (calendar.py:109-115).
@@ -403,45 +233,58 @@ def service_day_offsets(entries: DataFrame, stop_times: DataFrame,
     and the operator stays partitioned by table key at any scale.
     """
     key_cols = ["conv_id", "turn_idx", "table_id"]
-    ent = entries.where("kind IN ('time', 'repeat')")
-    if "repeat_ok" in ent.columns:
-        repeat_ok = F.col("repeat_ok")
-    elif "repeat_intervals" in ent.columns:
-        repeat_ok = ((F.col("kind") == "repeat")
-                     & F.col("repeat_intervals").isNotNull()
-                     & (F.size("repeat_intervals") > 0))
-    else:
-        repeat_ok = F.col("kind") == "repeat"
-    if "days_key" in ent.columns:
-        days_key = F.col("days_key")
-    else:
-        days_key = F.array_join(F.coalesce(
-            F.col("days"), F.array().cast("array<string>")), ",")
-    meta = (ent.select(*key_cols, "entry_id", "kind",
-                       days_key.alias("days_key"),
-                       repeat_ok.alias("repeat_ok"))
+    days_key = F.array_join(F.coalesce(
+        F.col("days"), F.array().cast("array<string>")), ",")
+    meta = (entries.where("kind IN ('time', 'repeat')")
+            .select(*key_cols, "entry_id", "kind",
+                    days_key.alias("days_key"), "repeat_intervals")
             .distinct()
             .withColumn("trip_id",
                         F.concat_ws("/", *key_cols, "entry_id")))
+    # the left join makes bigint columns nullable, which pandas
+    # receives as float64: 60-bit stop ids would be compared after
+    # rounding to 53 bits, so they travel as exact strings
     inp = meta.join(
         stop_times.select("trip_id", "stop_sequence", "arr_seconds",
-                          "stop_id"),
+                          F.col("stop_id").cast("string")
+                          .alias("stop_id")),
         "trip_id", "left")
+    mean = cfg.repeat_strategy == "mean"
 
-    def walk(pdf: pd.DataFrame) -> pd.DataFrame:
+    def copies(trip, src, src_shift, deltas, gap):
+        n = len(deltas)
+        prefix, acc = [], 0.0
+        for d in deltas:
+            acc += d
+            prefix.append(acc * 60)
+        # a cycle that does not advance would never reach the gap (the
+        # reference's add_repeat would not terminate): no copies
+        if prefix[-1] <= 0:
+            return []
+        out, k = [], 1
+        while True:
+            s = (k - 1) // n * prefix[-1] + prefix[(k - 1) % n]
+            if not s < gap:
+                return out
+            out.append((f"{trip}#{k}", src, src_shift + int(s)))
+            k += 1
+
+    def walk(pdf: "pd.DataFrame") -> "pd.DataFrame":
         import pandas as pd
 
-        out_ids, out_shifts = [], []
-        prev = None              # (stop order, {stop: arr}, shift)
+        rows = []
+        prev = None              # (trip_id, stop order, {stop: arr}, shift)
         prev_days = None
         offset = 0
-        pending_repeat = False
-        groups = {eid: g for eid, g in pdf.groupby("entry_id")}
-        for eid in sorted(groups):
-            g = groups[eid]
+        pending = None           # the pending repeat's deltas (minutes)
+        for _, g in pdf.groupby("entry_id", sort=True):
             r0 = g.iloc[0]
             if r0["kind"] == "repeat":
-                pending_repeat = bool(r0["repeat_ok"])
+                iv = r0["repeat_intervals"]
+                pending = ([float(x) for x in iv]
+                           if iv is not None and len(iv) else None)
+                if pending and mean:
+                    pending = [sum(pending) / len(pending)]
                 continue
             g = g[g["stop_sequence"].notna()].sort_values("stop_sequence")
             # a stop may appear at several non-consecutive sequences
@@ -452,61 +295,66 @@ def service_day_offsets(entries: DataFrame, stop_times: DataFrame,
             for sid, a in zip(g["stop_id"], g["arr_seconds"]):
                 if sid not in arr:
                     order.append(sid)
-                    arr[sid] = a
+                    arr[sid] = int(a)
             days = r0["days_key"]
             if prev_days is not None and days != prev_days:
                 offset = 0
                 prev = None
-            delta0 = 3600 * offset
-            flag = False
-            if prev is not None and prev[0]:
-                # an EMPTY previous StopTimes (every stop a connection)
-                # is FALSY (BaseContainer.__len__, gtfs_output/
-                # __init__.py:141), so `previous and previous > current`
-                # (handler.py:173) short-circuits and the rollover is
-                # DISABLED for the next entry — even though a fired
-                # comparison would return True (GTFS sweep seed 70000)
-                p_order, p_arr, p_shift = prev
-                # disjoint stop sets -> __lt__ exhausts -> False
-                # -> __gt__ True -> the shift fires
-                common = next((s for s in p_order if s in arr), None)
-                if common is None:
-                    flag = True
-                else:
-                    flag = not (p_arr[common] + p_shift
-                                < arr[common] + delta0)
-            shift = delta0 + (86400 if flag else 0)
-            if flag:
-                offset += 1
-            out_ids.append(r0["trip_id"])
-            out_shifts.append(shift)
+            shift = 3600 * offset
+            common = None
+            # an EMPTY previous StopTimes (every stop a connection) is
+            # FALSY (BaseContainer.__len__, gtfs_output/__init__.py:141),
+            # so `previous and previous > current` (handler.py:173)
+            # short-circuits and the rollover is DISABLED for the next
+            # entry (GTFS sweep seed 70000)
+            if prev is not None and prev[1]:
+                common = next((s for s in prev[1] if s in arr), None)
+                if common is None or not (prev[2][common] + prev[3]
+                                          < arr[common] + shift):
+                    shift += 86400
+                    offset += 1
+            trip = r0["trip_id"]
+            rows.append((trip, trip if order else None, shift))
+            if pending is None:
+                prev = (trip, order, arr, shift)
+            elif common is not None:
+                gap = arr[common] + shift - prev[2][common] - prev[3]
+                rows += copies(trip, prev[0], prev[3], pending, gap)
+            pending = None
             prev_days = days
-            if not pending_repeat:
-                prev = (order, arr, shift)
-            pending_repeat = False
-        return pd.DataFrame({"trip_id": out_ids,
-                             "shift_seconds": out_shifts})
+        return pd.DataFrame(rows, columns=["trip_id", "src_trip",
+                                           "shift_seconds"])
 
     return (inp.groupBy(*key_cols)
-            .applyInPandas(walk, "trip_id string, shift_seconds long"))
+            .applyInPandas(walk, "trip_id string, src_trip string, "
+                                 "shift_seconds long"))
 
 
-def apply_service_day_offsets(stop_times: DataFrame,
-                              offsets: DataFrame) -> DataFrame:
-    """Shift each trip's stop_times by its service-day offset and
-    regenerate the GTFS time strings."""
-    shifted = (stop_times.join(offsets, "trip_id", "left")
-               .withColumn("shift_seconds",
-                           F.coalesce("shift_seconds", F.lit(0)))
-               .withColumn("arr_seconds",
-                           F.col("arr_seconds") + F.col("shift_seconds"))
-               .withColumn("dep_seconds",
-                           F.col("dep_seconds") + F.col("shift_seconds"))
-               .drop("shift_seconds"))
-    return (shifted
-            .withColumn("arrival_time", gtfs_time_str(F.col("arr_seconds")))
-            .withColumn("departure_time",
-                        gtfs_time_str(F.col("dep_seconds"))))
+def service_day_offsets(entries: DataFrame, stop_times: DataFrame,
+                        cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
+    """(trip_id, shift_seconds) of every timed entry: handler_walk
+    without its repeat copies."""
+    return (handler_walk(entries, stop_times, cfg)
+            .where("src_trip IS NULL OR src_trip = trip_id")
+            .select("trip_id", "shift_seconds"))
+
+
+def shift_stop_times(stop_times: DataFrame, walk: DataFrame) -> DataFrame:
+    """The final stop_times: the unshifted rows joined to handler_walk
+    on src_trip, each trip and repeat copy shifted by its own offset,
+    with the GTFS time strings regenerated."""
+    shift = F.col("shift_seconds")
+    return (stop_times.withColumnRenamed("trip_id", "src_trip")
+            .join(walk, "src_trip")
+            .withColumn("arr_seconds", F.col("arr_seconds") + shift)
+            .withColumn("dep_seconds", F.col("dep_seconds") + shift)
+            .select("trip_id", "stop_sequence", "arr_seconds",
+                    "dep_seconds",
+                    gtfs_time_str(F.col("arr_seconds"))
+                    .alias("arrival_time"),
+                    gtfs_time_str(F.col("dep_seconds"))
+                    .alias("departure_time"),
+                    "stop_id"))
 
 
 def annots_key_col(col: str = "annotations"):
@@ -951,6 +799,7 @@ def gtfs_service_day_offsets(spark, sf_dir):
                         & F.col("repeat_intervals").isNotNull()
                         & (F.size("repeat_intervals") > 0))
                        .alias("repeat_ok"),
+                       "days", "repeat_intervals",
                        "stop_pos", "stop_name", "normalized_name",
                        "value",
                        F.coalesce("is_connection", F.lit(False))

@@ -74,10 +74,18 @@ class TestFeed:
                   "stop_annot string, is_connection boolean, value string")
         e = spark.createDataFrame(pd.DataFrame(rows, columns=cols), schema)
         feed = build_feed(e, spark)
-        trips = feed["trips"].collect()
-        # the unparseable trip still has a stop_times row (day_seconds
-        # 0 fallback, reference stop_times semantics) so both survive;
-        # routes exist only for parseable trips
+        # the unparseable entry still gets a stop_times row (the
+        # day_seconds 0 fallback, rolled over +24h against entry 0),
+        # but it has no route anchor, so only entry 0 becomes a trip:
+        # the row is an orphan (the reference's handling of entries
+        # with no parseable value is not pinned)
+        assert [t["trip_id"] for t in feed["trips"].collect()] == [
+            "c/0/0/0"]
+        assert sorted(tuple(r) for r in feed["stop_times"].select(
+            "trip_id", "stop_sequence", "arrival_time",
+            "departure_time").collect()) == [
+            ("c/0/0/0", 0, "10:00:00", "10:00:00"),
+            ("c/0/0/1", 0, "24:00:00", "24:00:00")]
         assert feed["routes"].count() == 1
 
     def test_zip_deterministic(self, spark, vag_entries, tmp_path):

@@ -9,14 +9,14 @@ import pandas as pd
 import pytest
 
 from pdf2gtfs_spark.operators.gtfs import (
-    build_calendar, build_stop_times, build_stops, build_trips,
-    expand_repeats,
+    build_calendar, build_stop_times, build_stops, handler_walk,
+    shift_stop_times,
 )
 
 ENTRY_COLS = ["conv_id", "turn_idx", "table_id", "entry_id", "kind",
               "header_text", "route_name", "annotations", "days",
               "repeat_intervals", "stop_pos", "stop_row_idx",
-              "stop_name", "stop_annot", "value"]
+              "stop_name", "stop_annot", "is_connection", "value"]
 
 
 def _entries_df(spark, rows):
@@ -26,14 +26,31 @@ def _entries_df(spark, rows):
               "annotations array<string>, days array<string>, "
               "repeat_intervals array<int>, stop_pos int, "
               "stop_row_idx int, stop_name string, stop_annot string, "
-              "value string")
+              "is_connection boolean, value string")
     return spark.createDataFrame(pdf, schema)
 
 
-def _mk(entry_id, stop_pos, name, value, kind="time", intervals=None):
+WEEKDAYS = ["0", "1", "2", "3", "4"]
+
+
+def _mk(entry_id, stop_pos, name, value, kind="time", intervals=None,
+        days=WEEKDAYS, conn=False):
     return ("c", 0, 0, entry_id, kind, "Montag - Freitag", "",
-            [], ["0", "1", "2", "3", "4"], intervals, stop_pos, stop_pos,
-            name, "", value)
+            [], days, intervals, stop_pos, stop_pos,
+            name, "", conn, value)
+
+
+def _copies(e, st):
+    """The repeat copies ("<current>#k") of handler_walk, as shifted
+    stop_times rows."""
+    return (shift_stop_times(st, handler_walk(e, st))
+            .where("trip_id LIKE '%#%'").collect())
+
+
+def _rep(entry_id, intervals):
+    """A repeat column ('alle <intervals> min') between two entries."""
+    return ("c", 0, 0, entry_id, "repeat", "", "", [], [], intervals,
+            None, None, None, None, None, "alle")
 
 
 class TestStopTimes:
@@ -114,8 +131,7 @@ class TestRepeatExpansion:
     def _base(self, spark, intervals, gap_minutes=60):
         rows = [_mk(0, 0, "Stop Alpha Long", "8.00"),
                 _mk(0, 1, "Stop Beta Long", "8.10"),
-                ("c", 0, 0, 1, "repeat", "", "", [], [], intervals,
-                 None, None, None, None, "alle"),
+                _rep(1, intervals),
                 _mk(2, 0, "Stop Alpha Long",
                     f"{8 + gap_minutes // 60}.{gap_minutes % 60:02}"),
                 _mk(2, 1, "Stop Beta Long",
@@ -133,7 +149,7 @@ class TestRepeatExpansion:
         # stop never lands (stop_times.py:255-261, 285-286; pinned by
         # the GTFS differential sweep)
         e, st = self._base(spark, intervals=[20], gap_minutes=60)
-        rep = expand_repeats(e, st).collect()
+        rep = _copies(e, st)
         starts = sorted(r["arrival_time"] for r in rep
                         if r["stop_sequence"] == 0)
         assert starts == ["08:20:00", "08:40:00"]
@@ -142,14 +158,14 @@ class TestRepeatExpansion:
         # deltas cycle [10, 20]: shifts 10, 30, 40 land (< gap 60);
         # the 60 tie is dropped (strict __lt__)
         e, st = self._base(spark, intervals=[10, 20], gap_minutes=60)
-        rep = expand_repeats(e, st).collect()
+        rep = _copies(e, st)
         starts = sorted(r["arrival_time"] for r in rep
                         if r["stop_sequence"] == 0)
         assert starts == ["08:10:00", "08:30:00", "08:40:00"]
 
     def test_copies_preserve_shape(self, spark):
         e, st = self._base(spark, intervals=[30], gap_minutes=60)
-        rep = expand_repeats(e, st).collect()
+        rep = _copies(e, st)
         trips = {}
         for r in rep:
             trips.setdefault(r["trip_id"], []).append(r)
@@ -168,17 +184,15 @@ class TestRepeatExpansion:
         # wrongly anchored rep3 on time2).
         rows = [_mk(0, 0, "Stop Alpha Long", "8.00"),
                 _mk(0, 1, "Stop Beta Long", "8.10"),
-                ("c", 0, 0, 1, "repeat", "", "", [], [], [25],
-                 None, None, None, None, "alle"),
+                _rep(1, [25]),
                 _mk(2, 0, "Stop Alpha Long", "8.40"),
                 _mk(2, 1, "Stop Beta Long", "8.55"),   # +15 offsets
-                ("c", 0, 0, 3, "repeat", "", "", [], [], [20],
-                 None, None, None, None, "alle"),
+                _rep(3, [20]),
                 _mk(4, 0, "Stop Alpha Long", "9.10"),
                 _mk(4, 1, "Stop Beta Long", "9.20")]
         e = _entries_df(spark, rows)
         st = build_stop_times(e, build_stops(e))
-        rep = expand_repeats(e, st).collect()
+        rep = _copies(e, st)
         trips = {}
         for r in rep:
             trips.setdefault(r["trip_id"], []).append(r)
@@ -199,6 +213,199 @@ class TestRepeatExpansion:
             9 * 3600]             # rep3 k=3 (9:00 < 9:10)
 
 
+def _feed_stop_times(spark, rows, cfg=None):
+    """Hand-built entries -> build_feed -> sorted (trip_id,
+    stop_sequence, arrival_time, departure_time) rows."""
+    from pdf2gtfs_spark.config import DEFAULT_CONFIG
+    from pdf2gtfs_spark.operators.feed import build_feed
+
+    feed = build_feed(_entries_df(spark, rows), spark,
+                      cfg or DEFAULT_CONFIG)
+    return sorted(tuple(r) for r in feed["stop_times"].select(
+        "trip_id", "stop_sequence", "arrival_time",
+        "departure_time").collect())
+
+
+def _st(trip, *times):
+    """Expected rows of one trip: one (arrival = departure) time per
+    consecutive stop_sequence."""
+    return [(trip, i, t, t) for i, t in enumerate(times)]
+
+
+class TestHandlerLoop:
+    """The reference's per-table handler loop (handler.py:144-217):
+    service-day offsets and repeat copies, asserted on full feed
+    stop_times rows."""
+
+    def test_tie_at_first_common_stop_rolls_over(self, spark):
+        # __gt__ = not __lt__: equal arrivals at the first common stop
+        # count as "previous > current" -> +24h
+        rows = [_mk(0, 0, "Stop Alpha Long", "8.00"),
+                _mk(0, 1, "Stop Beta Long", "8.10"),
+                _mk(1, 0, "Stop Alpha Long", "8.00"),
+                _mk(1, 1, "Stop Beta Long", "8.20")]
+        assert _feed_stop_times(spark, rows) == (
+            _st("c/0/0/0", "08:00:00", "08:10:00")
+            + _st("c/0/0/1", "32:00:00", "32:20:00"))
+
+    def test_disjoint_stops_roll_over(self, spark):
+        # no common stop: __lt__ exhausts -> False -> +24h
+        rows = [_mk(0, 0, "Stop Alpha Long", "8.00"),
+                _mk(1, 1, "Stop Gamma Long", "9.00")]
+        assert _feed_stop_times(spark, rows) == (
+            _st("c/0/0/0", "08:00:00")
+            + [("c/0/0/1", 1, "33:00:00", "33:00:00")])
+
+    def test_second_crossing_adds_an_hour(self, spark):
+        # the offset is passed as Time(hours), so the 2nd crossing
+        # shifts by 24h + 1h, not 48h
+        rows = [_mk(0, 0, "Stop Alpha Long", "10.00"),
+                _mk(1, 0, "Stop Alpha Long", "9.00"),
+                _mk(2, 0, "Stop Alpha Long", "6.00")]
+        assert _feed_stop_times(spark, rows) == (
+            _st("c/0/0/0", "10:00:00") + _st("c/0/0/1", "33:00:00")
+            + _st("c/0/0/2", "31:00:00"))
+
+    def test_days_change_resets_offset_and_previous(self, spark):
+        sat = ["5"]
+        rows = [_mk(0, 0, "Stop Alpha Long", "10.00"),
+                _mk(1, 0, "Stop Alpha Long", "9.00"),
+                # new days: no previous -> no shift, offset back to 0
+                _mk(2, 0, "Stop Alpha Long", "8.00", days=sat),
+                # so this crossing is +24h, not +25h
+                _mk(3, 0, "Stop Alpha Long", "7.00", days=sat)]
+        assert _feed_stop_times(spark, rows) == (
+            _st("c/0/0/0", "10:00:00") + _st("c/0/0/1", "33:00:00")
+            + _st("c/0/0/2", "08:00:00") + _st("c/0/0/3", "31:00:00"))
+
+    def test_all_connection_previous_disables_rollover(self, spark):
+        # entry 0's only value is at a connection stop: its StopTimes
+        # is empty and falsy, so entry 1 is not compared (it would be
+        # disjoint -> +24h otherwise)
+        rows = [_mk(0, 0, "Stop Alpha Long", "10.00", conn=True),
+                _mk(1, 1, "Stop Beta Long", "9.00")]
+        assert _feed_stop_times(spark, rows) == [
+            ("c/0/0/1", 1, "09:00:00", "09:00:00")]
+
+    def test_repeat_without_intervals_clears_pending(self, spark):
+        rows = [_mk(0, 0, "Stop Alpha Long", "8.00"),
+                _mk(0, 1, "Stop Beta Long", "8.10"),
+                _rep(1, [20]),
+                _rep(2, None),
+                _mk(3, 0, "Stop Alpha Long", "9.00"),
+                _mk(3, 1, "Stop Beta Long", "9.10")]
+        assert _feed_stop_times(spark, rows) == (
+            _st("c/0/0/0", "08:00:00", "08:10:00")
+            + _st("c/0/0/3", "09:00:00", "09:10:00"))
+
+    def test_later_repeat_replaces_pending(self, spark):
+        rows = [_mk(0, 0, "Stop Alpha Long", "8.00"),
+                _mk(0, 1, "Stop Beta Long", "8.10"),
+                _rep(1, [10]),
+                _rep(2, [25]),
+                _mk(3, 0, "Stop Alpha Long", "9.00"),
+                _mk(3, 1, "Stop Beta Long", "9.10")]
+        assert _feed_stop_times(spark, rows) == sorted(
+            _st("c/0/0/0", "08:00:00", "08:10:00")
+            + _st("c/0/0/3", "09:00:00", "09:10:00")
+            + _st("c/0/0/3#1", "08:25:00", "08:35:00")
+            + _st("c/0/0/3#2", "08:50:00", "09:00:00"))
+
+    def test_copies_come_from_day_shifted_previous(self, spark):
+        # entry 1 crosses (+24h); the right anchor entry 3 crosses
+        # again (+25h); copies shift entry 1's shifted times until the
+        # shifted entry 3 (gap 2h at Stop Alpha)
+        rows = [_mk(0, 0, "Stop Alpha Long", "10.00"),
+                _mk(0, 1, "Stop Beta Long", "10.10"),
+                _mk(1, 0, "Stop Alpha Long", "9.00"),
+                _mk(1, 1, "Stop Beta Long", "9.10"),
+                _rep(2, [30]),
+                _mk(3, 0, "Stop Alpha Long", "10.00"),
+                _mk(3, 1, "Stop Beta Long", "10.10")]
+        assert _feed_stop_times(spark, rows) == sorted(
+            _st("c/0/0/0", "10:00:00", "10:10:00")
+            + _st("c/0/0/1", "33:00:00", "33:10:00")
+            + _st("c/0/0/3", "35:00:00", "35:10:00")
+            + _st("c/0/0/3#1", "33:30:00", "33:40:00")
+            + _st("c/0/0/3#2", "34:00:00", "34:10:00")
+            + _st("c/0/0/3#3", "34:30:00", "34:40:00"))
+
+    def test_copy_gap_uses_first_arrival_of_a_repeated_stop(self, spark):
+        # the right anchor visits Stop Alpha twice; __lt__ resolves the
+        # FIRST entry per stop (_get_entry_from_stop_id), so the gap is
+        # 60 min (9:00), not 80 min (9:20)
+        rows = [_mk(0, 0, "Stop Alpha Long", "8.00"),
+                _mk(0, 1, "Stop Beta Long", "8.10"),
+                _rep(1, [20]),
+                _mk(2, 0, "Stop Alpha Long", "9.00"),
+                _mk(2, 1, "Stop Beta Long", "9.10"),
+                _mk(2, 2, "Stop Alpha Long", "9.20")]
+        assert _feed_stop_times(spark, rows) == sorted(
+            _st("c/0/0/0", "08:00:00", "08:10:00")
+            + _st("c/0/0/2", "09:00:00", "09:10:00", "09:20:00")
+            + _st("c/0/0/2#1", "08:20:00", "08:30:00")
+            + _st("c/0/0/2#2", "08:40:00", "08:50:00"))
+
+    def test_mean_strategy_averages_intervals(self, spark):
+        import dataclasses
+
+        from pdf2gtfs_spark.config import DEFAULT_CONFIG
+        rows = [_mk(0, 0, "Stop Alpha Long", "8.00"),
+                _mk(0, 1, "Stop Beta Long", "8.10"),
+                _rep(1, [10, 20]),
+                _mk(2, 0, "Stop Alpha Long", "9.00"),
+                _mk(2, 1, "Stop Beta Long", "9.10")]
+        cfg = dataclasses.replace(DEFAULT_CONFIG, repeat_strategy="mean")
+        assert _feed_stop_times(spark, rows, cfg) == sorted(
+            _st("c/0/0/0", "08:00:00", "08:10:00")
+            + _st("c/0/0/2", "09:00:00", "09:10:00")
+            + _st("c/0/0/2#1", "08:15:00", "08:25:00")
+            + _st("c/0/0/2#2", "08:30:00", "08:40:00")
+            + _st("c/0/0/2#3", "08:45:00", "08:55:00"))
+
+    def test_zero_interval_keeps_copy_formula(self, spark):
+        # '0-20' style intervals contain a 0: the cycle [0, 20] still
+        # sums to 20 min, so shifts 0, 20, 20, 40, 40 stay below the
+        # 60-minute gap
+        rows = [_mk(0, 0, "Stop Alpha Long", "8.00"),
+                _mk(0, 1, "Stop Beta Long", "8.10"),
+                _rep(1, [0, 20]),
+                _mk(2, 0, "Stop Alpha Long", "9.00"),
+                _mk(2, 1, "Stop Beta Long", "9.10")]
+        assert _feed_stop_times(spark, rows) == sorted(
+            _st("c/0/0/0", "08:00:00", "08:10:00")
+            + _st("c/0/0/2", "09:00:00", "09:10:00")
+            + _st("c/0/0/2#1", "08:00:00", "08:10:00")
+            + _st("c/0/0/2#2", "08:20:00", "08:30:00")
+            + _st("c/0/0/2#3", "08:20:00", "08:30:00")
+            + _st("c/0/0/2#4", "08:40:00", "08:50:00")
+            + _st("c/0/0/2#5", "08:40:00", "08:50:00"))
+
+    def test_zero_cycle_emits_no_copies(self, spark):
+        rows = [_mk(0, 0, "Stop Alpha Long", "8.00"),
+                _rep(1, [0]),
+                _mk(2, 0, "Stop Alpha Long", "9.00")]
+        assert _feed_stop_times(spark, rows) == (
+            _st("c/0/0/0", "08:00:00") + _st("c/0/0/2", "09:00:00"))
+
+    def test_stop_ids_compared_exactly(self, spark):
+        # 60-bit ids that differ only below float64's 53-bit mantissa
+        # are different stops: the sets are disjoint -> +24h.  The
+        # repeat row makes the walk input carry nulls.
+        from pdf2gtfs_spark.operators.gtfs import service_day_offsets
+        rows = [_mk(0, 0, "Stop Alpha Long", "8.00"),
+                _rep(1, None),
+                _mk(2, 0, "Stop Beta Long", "9.00")]
+        st = spark.createDataFrame(
+            [("c/0/0/0", 0, 8 * 3600, 8 * 3600, 2 ** 60),
+             ("c/0/0/2", 0, 9 * 3600, 9 * 3600, 2 ** 60 + 1)],
+            "trip_id string, stop_sequence int, arr_seconds long, "
+            "dep_seconds long, stop_id long")
+        got = dict(service_day_offsets(_entries_df(spark, rows),
+                                       st).collect())
+        assert got == {"c/0/0/0": 0, "c/0/0/2": 86400}
+
+
 class TestCalendarAndTrips:
     def test_calendar_dedup(self, spark):
         rows = [_mk(0, 0, "Stop Alpha Long", "10.00"),
@@ -210,10 +417,11 @@ class TestCalendarAndTrips:
         assert (c["monday"], c["friday"], c["saturday"]) == (1, 1, 0)
 
     def test_trips_per_entry(self, spark):
+        from pdf2gtfs_spark.operators.feed import build_feed
         rows = [_mk(0, 0, "Stop Alpha Long", "10.00"),
                 _mk(1, 0, "Stop Alpha Long", "11.00")]
         e = _entries_df(spark, rows)
-        assert build_trips(e).count() == 2
+        assert build_feed(e, spark)["trips"].count() == 2
 
 
 class TestFixtureGtfs:

@@ -1,6 +1,6 @@
 """Differential tests for the GTFS output surface: the repo's feed
 assembly (operators/gtfs.py build_stops/build_stop_times/
-expand_repeats/build_calendar + operators/feed.py build_feed) vs the
+handler_walk/build_calendar + operators/feed.py build_feed) vs the
 reference's gtfs_output/GTFSHandler (handler.py:118-237), both driven
 from the SAME payload through each side's legacy extraction.
 
@@ -247,7 +247,7 @@ class TestSyntheticFeeds:
                                       5000, 5001, 70000])
     def test_layout_feed(self, spark, seed, request):
         """Sample of the offline GTFS sweeps: multi-block pages
-        (stop-key collapse), repeat columns (expand_repeats vs
+        (stop-key collapse), repeat columns (handler_walk vs
         add_repeat), footer days, sparse columns.  Seed 70000 (round
         5c) pinned the falsy-empty-previous rule: an entry whose every
         stop is a connection produces an EMPTY StopTimes, and

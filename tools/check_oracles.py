@@ -31,7 +31,7 @@ def main(sf_dir: str, only: list[str]) -> int:
 
     import __spark_entry__ as e
 
-    spark = (SparkSession.builder.master("local[8]")
+    spark = (SparkSession.builder.master(f"local[{os.cpu_count() or 1}]")
              .appName("oracle-check")
              .config("spark.sql.shuffle.partitions", "8")
              .config("spark.driver.host", "127.0.0.1")
