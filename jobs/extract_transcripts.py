@@ -26,9 +26,11 @@ Usage (sandbox / tests)::
         --input /tmp/transcripts --output /tmp/out --n-buckets 8
 
 Resume semantics: the job anti-joins pending conversation buckets
-against the committed lineage table under ``<output>/lineage`` — a
-killed run re-submitted with the same ``--output`` recomputes only
-unfinished buckets (pdf2gtfs_spark/plans/lineage.py).  On an Iceberg
+against the lineage table under ``<output>/lineage``, counting only
+buckets committed under the same input snapshot id — a killed run
+re-submitted with the same ``--output`` and input recomputes only
+unfinished buckets, and a run against changed input recomputes every
+bucket (pdf2gtfs_spark/plans/lineage.py).  On an Iceberg
 deployment pass ``--input-table catalog.db.transcripts`` instead of
 ``--input``; the snapshot id is read from the table's ``.snapshots``
 metadata so lineage rows pin the exact input version.
@@ -132,7 +134,8 @@ def main(argv: list[str] | None = None) -> int:
         group_size=args.group_size, max_groups=args.max_groups,
         num_partitions=args.num_partitions)
 
-    lineage = spark.read.parquet(args.output + "/lineage")
+    lineage = (spark.read.parquet(args.output + "/lineage")
+               .where(F.col("input_snapshot_id") == snapshot))
     totals = lineage.agg(
         F.countDistinct("bucket").alias("committed_buckets"),
         F.sum("input_rows").alias("input_rows"),

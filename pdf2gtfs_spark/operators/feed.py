@@ -11,6 +11,10 @@ Spark-first shapes:
   kept trips (handler.py:259-264) — pruning needs no extra join;
 - holiday calendar_dates (handler.py:219-237): broadcast cross join of
   the (tiny) calendar dim against a deterministic holiday dim (J11);
+- each intermediate with several consumers (stops, the unshifted
+  stop_times, the handler walk, the routed trips, the calendar) is
+  evaluated once, by ``localCheckpoint``: otherwise every consumer
+  frame re-runs its lineage, the walk's Python stage included;
 - the zip writer collects only the final per-file frames — at real
   scale stop_times would stay a partitioned table and the zip step
   would be a driver-side stream over its CSV parts; every transform
@@ -28,6 +32,8 @@ import io
 import zipfile
 from pathlib import Path
 
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -41,10 +47,19 @@ from pdf2gtfs_spark.operators.gtfs import (
 )
 
 AGENCY_ROW = ("0", "pdf2gtfs", "https://example.com", "Europe/Berlin")
+AGENCY_COLUMNS = ("agency_id", "agency_name", "agency_url",
+                  "agency_timezone")
 FEED_DATE_BOUNDS = ("20240101", "20251231")
 # deterministic fixed-date holiday dim (synthetic stand-in for the
 # reference's country_holidays call)
 HOLIDAY_MONTH_DAYS = [(1, 1), (5, 1), (10, 3), (12, 25), (12, 26)]
+
+
+def _local_frame(spark: SparkSession, pdf: pd.DataFrame) -> DataFrame:
+    """A small driver-made string frame through Arrow: a list of
+    tuples would start a Python-worker stage to ship a few rows."""
+    return spark.createDataFrame(pa.Table.from_pandas(pdf,
+                                                      preserve_index=False))
 
 
 def holiday_dates() -> list[str]:
@@ -127,8 +142,7 @@ def build_calendar_dates(calendar: DataFrame,
     """J11: calendar x holiday dim broadcast cross join
     (handler.py:219-237): holiday services gain the dates
     (exception_type 1), weekday services lose them (2)."""
-    hol = spark.createDataFrame([(d,) for d in holiday_dates()],
-                                "date string")
+    hol = _local_frame(spark, pd.DataFrame({"date": holiday_dates()}))
     on_holiday = F.array_contains(F.split("days_key", ","), "h")
     return (calendar
             .withColumn("exception_type",
@@ -144,10 +158,14 @@ def build_feed(entries: DataFrame, spark: SparkSession,
     """entries -> the seven GTFS frames (handler.timetable_to_gtfs).
 
     Pass ``stops_src`` (pipeline.stops_table) so stops.txt also carries
-    stops without any entry value, like the reference does."""
-    stops = build_stops(entries, cfg, stops_src=stops_src)
-    st = build_stop_times(entries, stops, cfg)
-    walk = handler_walk(entries, st, cfg)
+    stops without any entry value, like the reference does.
+
+    The shared intermediates are checkpointed here, so the call itself
+    runs Spark jobs; the returned frames read their blocks."""
+    stops = build_stops(entries, cfg,
+                        stops_src=stops_src).localCheckpoint()
+    st = build_stop_times(entries, stops, cfg).localCheckpoint()
+    walk = handler_walk(entries, st, cfg).localCheckpoint()
     stop_times = shift_stop_times(st, walk).select(
         "trip_id", "stop_sequence", "arrival_time", "departure_time",
         "stop_id")
@@ -158,11 +176,11 @@ def build_feed(entries: DataFrame, spark: SparkSession,
              .withColumn("anchor",
                          F.regexp_replace("trip_id", "#[0-9]+$", ""))
              .join(trip_route_service(entries, cfg)
-                   .withColumnRenamed("trip_id", "anchor"), "anchor"))
-    cal = build_calendar(entries)
-    agency = spark.createDataFrame(
-        [AGENCY_ROW], "agency_id string, agency_name string, "
-        "agency_url string, agency_timezone string")
+                   .withColumnRenamed("trip_id", "anchor"), "anchor")
+             .localCheckpoint())
+    cal = build_calendar(entries).localCheckpoint()
+    agency = _local_frame(spark, pd.DataFrame([AGENCY_ROW],
+                                              columns=AGENCY_COLUMNS))
     calendar = cal.select(
         "service_id",
         *[F.col(d) for d in ["monday", "tuesday", "wednesday", "thursday",
@@ -184,13 +202,15 @@ def build_feed(entries: DataFrame, spark: SparkSession,
 def write_feed_zip(feed: dict[str, DataFrame], out_path: str) -> str:
     """Serialize the frames as GTFS CSVs into one zip (S7,
     handler.py:266-310). Deterministic: Spark sorts each frame by all
-    columns (executor-side shuffle sort); the driver only streams the
-    already-ordered rows into the zip via toLocalIterator — one
-    partition in driver memory at a time, never a full toPandas.
+    columns (executor-side shuffle sort); the driver collects the
+    already-ordered rows of one frame in one job and buffers its whole
+    CSV file in memory before adding it to the zip.
 
-    Driver-size bound: a GTFS feed is output-sized (stop_times
-    dominates, tens of MB for a national feed), so a single-writer zip
-    sink is the right shape; everything upstream stays distributed.
+    Driver memory bound: one whole file (its rows plus its CSV text),
+    so stop_times, which dominates, makes it about the feed's size — a
+    GTFS feed is output-sized (tens of MB for a national feed), so a
+    single-writer zip sink is the right shape; everything upstream
+    stays distributed.
     """
     out = Path(out_path)
     out.parent.mkdir(parents=True, exist_ok=True)
@@ -200,7 +220,7 @@ def write_feed_zip(feed: dict[str, DataFrame], out_path: str) -> str:
             buf = io.StringIO()
             w = csv.writer(buf, lineterminator="\n")
             w.writerow(cols)
-            for row in df.orderBy(*cols).toLocalIterator():
+            for row in df.orderBy(*cols).collect():
                 w.writerow(["" if v is None else v for v in row])
             info = zipfile.ZipInfo(f"{name}.txt", date_time=(2024,) + (1,) * 5)
             zf.writestr(info, buf.getvalue())

@@ -1,18 +1,25 @@
 """GTFS feed assembly end-to-end: entries -> seven files -> feed.zip.
 
 Oracle: reference handler.timetable_to_gtfs semantics
-(gtfs_output/handler.py:118-310) on the vag golden fixture's entries.
+(gtfs_output/handler.py:118-310) on the vag golden fixture's entries;
+the generated-page test needs no reference fixture.
 """
 
+import dataclasses
 import zipfile
 
 import pytest
 
+from pdf2gtfs_spark.config import DEFAULT_CONFIG
 from pdf2gtfs_spark.operators.feed import (
     build_feed, build_routes, holiday_dates, write_feed_zip,
 )
-from pdf2gtfs_spark.plans.pipeline import entries_table, run_extract
-from pdf2gtfs_spark.sources.transcripts import fixture_turns
+from pdf2gtfs_spark.plans.pipeline import (
+    entries_table, run_extract, stops_table,
+)
+from pdf2gtfs_spark.sources.transcripts import (
+    cells_to_payload, fixture_turns, vag_like_block,
+)
 
 GTFS_FILES = {"agency", "stops", "routes", "calendar", "calendar_dates",
               "trips", "stop_times"}
@@ -102,6 +109,42 @@ class TestFeed:
                              "departure_time,stop_id")
             # 20 trips, sparse columns -> 284 folded rows + header
             assert len(st) == 285
+
+    def test_generated_pages_zip(self, spark, tmp_path):
+        # two new-path pages of one document: (n_stops, n_trips,
+        # stop_seed) per stacked block, with a days header each
+        pages = [[(8, 4, 3), (6, 3, 10)], [(7, 5, 3)]]
+        rows = []
+        for t, blocks in enumerate(pages):
+            cells, y = [], 100.0
+            for n_stops, n_trips, seed in blocks:
+                block, xs = vag_like_block(y, n_stops=n_stops,
+                                           n_trips=n_trips,
+                                           stop_seed=seed)
+                cells += block + [("Montag - Freitag", xs[0], y - 14.0)]
+                y += n_stops * 10.0 + 36.0
+            rows.append(("doc", t, cells_to_payload(cells)))
+        tdf = spark.createDataFrame(
+            rows, "conv_id string, turn_idx int, text string")
+        cfg = dataclasses.replace(DEFAULT_CONFIG, extraction_path="new")
+
+        def publish(name):
+            ext = run_extract(tdf, cfg)
+            feed = build_feed(entries_table(ext), spark, cfg,
+                              stops_src=stops_table(ext))
+            write_feed_zip(feed, str(tmp_path / name))
+            return (tmp_path / name).read_bytes()
+
+        assert publish("feed1.zip") == publish("feed2.zip")
+        with zipfile.ZipFile(tmp_path / "feed1.zip") as zf:
+            assert {n.rsplit(".", 1)[0] for n in zf.namelist()} == GTFS_FILES
+            trips = zf.read("trips.txt").decode().splitlines()[1:]
+            st = zf.read("stop_times.txt").decode().splitlines()[1:]
+        blocks = [b for page in pages for b in page]
+        # one trip per time column, one stop_times row per time cell
+        assert len(trips) == sum(n_trips for _, n_trips, _ in blocks)
+        assert len(st) == sum(n_stops * n_trips
+                              for n_stops, n_trips, _ in blocks)
 
     def test_routes_first_last_parseable(self, spark):
         import pandas as pd

@@ -83,7 +83,8 @@ class TestLineageResume:
             spark, tdf, out, run_id="r1", input_snapshot_id="s1",
             n_buckets=4, group_size=2, max_groups=1)
         assert len(first) == 2
-        assert committed_buckets(spark, f"{out}/lineage") == set(first)
+        assert committed_buckets(spark, f"{out}/lineage",
+                                 "s1") == set(first)
         # resume: processes only the remaining buckets
         second = run_with_checkpoint(
             spark, tdf, out, run_id="r2", input_snapshot_id="s1",
@@ -102,6 +103,64 @@ class TestLineageResume:
             spark, tdf, out, run_id="r3", input_snapshot_id="s1",
             n_buckets=4, group_size=2)
         assert third == []
+
+    def test_resume_under_new_snapshot_recomputes_every_bucket(
+            self, spark, small_input, tmp_path):
+        _, _, tdf, _ = small_input
+        out = str(tmp_path / "out")
+        first = run_with_checkpoint(
+            spark, tdf, out, run_id="r1", input_snapshot_id="s1",
+            n_buckets=4, group_size=2, max_groups=1)
+        assert len(first) == 2
+        assert committed_buckets(spark, f"{out}/lineage", "s2") == set()
+        # the input changed: nothing committed under s1 counts
+        second = run_with_checkpoint(
+            spark, tdf, out, run_id="r2", input_snapshot_id="s2",
+            n_buckets=4, group_size=2)
+        assert second == [0, 1, 2, 3]
+        assert committed_buckets(spark, f"{out}/lineage", "s2") == {
+            0, 1, 2, 3}
+
+    def test_lineage_counts_equal_tables(self, spark, small_input,
+                                         tmp_path):
+        import pandas as pd
+
+        _, _, tdf, _ = small_input
+        extra = spark.createDataFrame(pd.DataFrame({
+            "conv_id": ["odd_malformed", "odd_empty"],
+            "turn_idx": [0, 0],
+            "text": ["not a char-box payload", ""]}),
+            "conv_id string, turn_idx int, text string")
+        src = tdf.select("conv_id", "turn_idx", "text").unionByName(extra)
+        out = str(tmp_path / "out")
+        sc = spark.sparkContext
+        sc.setJobDescription("caller")
+        try:
+            # 8 buckets in groups of 3: uneven groups 3 + 3 + 2
+            done = run_with_checkpoint(
+                spark, src, out, run_id="r1", input_snapshot_id="s1",
+                n_buckets=8, group_size=3)
+            # the commit groups' job descriptions are the caller's again
+            assert sc.getLocalProperty("spark.job.description") == "caller"
+        finally:
+            sc.setJobDescription(None)
+        assert done == list(range(8))
+        lin = spark.read.parquet(f"{out}/lineage").toPandas()
+        assert sorted(lin["bucket"]) == list(range(8))
+        tables = spark.read.parquet(f"{out}/tables").toPandas()
+        per_bucket = {
+            int(b): (g[["conv_id", "turn_idx"]].drop_duplicates().shape[0],
+                     int(g["table_id"].notna().sum()),
+                     int(g["malformed"].sum()))
+            for b, g in tables.groupby("bucket")}
+        for r in lin.itertuples():
+            assert (r.input_rows, r.extracted_tables,
+                    r.malformed_turns) == per_bucket.get(r.bucket,
+                                                         (0, 0, 0))
+        # the malformed and the empty turn are counted as input rows
+        # and as malformed turns
+        assert lin["input_rows"].sum() == src.count()
+        assert lin["malformed_turns"].sum() == 2
 
 
 class TestArrowStructContract:
